@@ -92,15 +92,7 @@ class Graft(spark: SparkSession, dataDir: String,
     try {
       sels.zipWithIndex.foreach { case (sel, i) =>
         val rows = TreeWalk.selectRows(loader, sel)
-        // cardinality invariant, checked BEFORE the payload is written:
-        // the distinct walk-key values among the selected rows must
-        // cover every selected key. Compared on distinct counts (not
-        // raw row counts) so tables whose walk key is a non-unique
-        // stand-in — many rows per key — export without spurious errors.
-        val nKeys = sel.keys.count()
-        val nRowKeys = rows.select(sel.columns.head, sel.columns.tail: _*).distinct().count()
-        if (nRowKeys != nKeys)
-          sys.error(s"Only $nRowKeys of $nKeys keys copied for ${sel.table}")
+        TreeWalk.requireCardinality(sel, rows)
         val payload = target.writePayload(s"${sel.table}_$i", rows)
         target.apply(TableLoad(sel.table, payload))
       }

@@ -116,14 +116,7 @@ object DumpStore {
     val ops = selections.zipWithIndex.map { case (sel, i) =>
       val payload = s"payloads/${sel.table}_$i"
       val rows = TreeWalk.selectRows(loader, sel)
-      // invariant first (before any bytes land): distinct walk-key
-      // values among the selected rows must cover every selected key —
-      // distinct-vs-distinct, so non-unique stand-in keys (many rows
-      // per key) don't trip it
-      val nKeys = sel.keys.distinct().count()
-      val nRowKeys = rows.select(sel.columns.head, sel.columns.tail: _*).distinct().count()
-      if (nRowKeys != nKeys)
-        sys.error(s"Only $nRowKeys of $nKeys keys copied for ${sel.table} — cardinality invariant violated")
+      TreeWalk.requireCardinality(sel, rows)
       rows.write.mode(SaveMode.Overwrite).parquet(s"$dumpDir/$payload")
       TableLoad(sel.table, payload)
     }

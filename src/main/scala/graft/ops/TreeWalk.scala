@@ -175,6 +175,20 @@ object TreeWalk {
     t.join(sel.keys, keyCondition(t, sel), "left_semi")
   }
 
+  /** The copy invariant (`CopyUtils.java:44-46`), checked before a
+    * selection's payload is written: the distinct key values among its
+    * selected rows must cover every distinct selected key. Distinct on
+    * both sides, so a key listed twice (a duplicated root id row) or
+    * a non-unique stand-in key (many rows per key) passes, while a key
+    * with no row fails. */
+  def requireCardinality(sel: Selection, rows: DataFrame): Unit = {
+    val nKeys = sel.keys.distinct().count()
+    val nRowKeys = rows.select(sel.columns.head, sel.columns.tail: _*).distinct().count()
+    if (nRowKeys != nKeys)
+      sys.error(s"Only $nRowKeys of $nKeys keys copied for ${sel.table} — " +
+        "cardinality invariant violated")
+  }
+
   /** `deleteTree` in query form (J4): target rows whose key is NOT in
     * the selection — `left_anti` (`CopyUtils.java:23-31`,
     * `DeleteByPk.java:15-43`). */

@@ -49,6 +49,32 @@ class GraftSpec extends SparkSpec {
     assert(expectedRows > sels.last.keys.count())
   }
 
+  test("copyTree and exportSelections agree on a duplicated root id row") {
+    // a source whose root table lists customer 3 twice: the root keys
+    // hold 3 twice, but every distinct key has its rows
+    val dir = Files.createTempDirectory("graft-duproot").toString
+    load("customer").filter($"c_custkey" <= 5)
+      .unionByName(load("customer").filter($"c_custkey" === 3))
+      .write.parquet(s"$dir/customer.parquet")
+    load("orders").write.parquet(s"$dir/orders.parquet")
+    val g = new Graft(spark, dir)
+    val path = Seq("customer->orders.o_custkey")
+    val dump = Files.createTempDirectory("graft-dump").toString
+    val target = g.fileTarget(dump)
+    g.copyTree(target, path, "customer", 1L to 5L)
+    target.close()
+    assert(spark.read.parquet(s"$dump/payloads/customer_0").count() == 6)
+    val expectedOrders = load("orders").filter($"o_custkey".between(1, 5)).count()
+    assert(spark.read.parquet(s"$dump/payloads/orders_1").count() == expectedOrders)
+    val loader = (t: String) => Tables.load(spark, dir, t)
+    val sels = graft.ops.TreeWalk.selectAlongPath(spark, loader, path,
+      graft.catalog.SchemaCatalog.walkPks, "customer", 1L to 5L)
+    val exported = Files.createTempDirectory("graft-export").toString
+    try DumpStore.exportSelections(spark, loader, sels, exported)
+    finally graft.ops.TreeWalk.release(sels)
+    assert(spark.read.parquet(s"$exported/payloads/customer_0").count() == 6)
+  }
+
   test("copyTree releases its cached key levels on completion") {
     val dump = Files.createTempDirectory("graft-dump").toString
     val g = new Graft(spark, sf)

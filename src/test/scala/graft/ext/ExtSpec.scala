@@ -1426,15 +1426,27 @@ class DedupSpec extends SparkSpec {
       s"expected only the (1,2) pair at distance 1, got $out")
   }
 
-  test("connectedComponents: chains collapse to min id, separate clusters stay apart") {
-    // 1-2-3 chained, 5-6 separate, 7-8-9 via two pairs
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (8L, 7L), (8L, 9L))
-      .toDF("doc_a", "doc_b")
-    val comps = Dedup.connectedComponents(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L,
-      7L -> 7L, 8L -> 7L, 9L -> 7L))
+  // The two loop widths every CC spec runs at: the default rule (a
+  // small graph fits one partition, so the union-find seed is exact
+  // and round 0 only verifies it) and one edge per partition, capped
+  // at the session's 4 shuffle partitions, which sends the same graph
+  // through the distributed propagate + pointer-jump rounds.
+  private val ccWidths = Seq("" -> Dedup.ccEdgesPerPartition, " (4 partitions)" -> 1L)
+
+  /** Labels by node, and the rounds the loop ran. */
+  private def ccAt(pairs: Seq[(Long, Long)], edgesPerPartition: Long): (Map[Long, Long], Int) = {
+    val (df, rounds) = Dedup.componentsAndRounds(pairs.toDF("doc_a", "doc_b"),
+      maxIter = 25, idCol = "doc_id", edgesPerPartition)
+    (df.as[(Long, Long)].collect().toMap, rounds)
   }
+
+  for ((width, epp) <- ccWidths)
+    test(s"connectedComponents: chains collapse to min id, separate clusters stay apart$width") {
+      // 1-2-3 chained, 5-6 separate, 7-8-9 via two pairs
+      val (comps, _) = ccAt(Seq((1L, 2L), (2L, 3L), (5L, 6L), (8L, 7L), (8L, 9L)), epp)
+      assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L,
+        7L -> 7L, 8L -> 7L, 9L -> 7L))
+    }
 
   test("dedupCorpus keeps the min-id representative per cluster and all unpaired docs") {
     val docs = (1L to 10L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
@@ -1496,37 +1508,67 @@ class DedupSpec extends SparkSpec {
     assert(out == Map(3L -> (1L, 2L), 2L -> (2L, 2L)))
   }
 
-  test("connectedComponents converges on a long path (diameter > 1 round)") {
-    val pairs = (1L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val comps = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
-    assert(comps.size == 12 && comps.values.forall(_ == 1L))
+  for ((width, epp) <- ccWidths)
+    test(s"connectedComponents converges on a long path (diameter > 1 round)$width") {
+      val (comps, _) = ccAt((1L until 12L).map(i => (i, i + 1)), epp)
+      assert(comps.size == 12 && comps.values.forall(_ == 1L))
+    }
+
+  for ((width, epp) <- ccWidths)
+    test(s"connectedComponents matches a reference union-find on random graphs$width") {
+      val rnd = new scala.util.Random(42)
+      for (_ <- 1 to 3) {
+        val n = 30
+        val pairList = (1 to 40)
+          .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+          .filter { case (a, b) => a != b }
+          .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+          .distinct
+        val (got, _) = ccAt(pairList, epp)
+        // reference: driver-side union-find with min-id roots
+        val parent = scala.collection.mutable.Map.empty[Long, Long]
+        def find(x: Long): Long = {
+          val p = parent.getOrElse(x, x)
+          if (p == x) x else { val r = find(p); parent(x) = r; r }
+        }
+        pairList.foreach { case (a, b) =>
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        val want = pairList.flatMap { case (a, b) => Seq(a, b) }.distinct
+          .map(x => x -> find(x)).toMap
+        assert(got == want)
+      }
+    }
+
+  test("connectedComponents: a 2,000-node chain converges by pointer jumping across partitions") {
+    val (labels, rounds) = ccAt((0L until 1999L).map(i => (i, i + 1)), 1L)
+    assert(labels.size == 2000 && labels.values.forall(_ == 0L))
+    // propagation alone needs ~diameter (2,000) rounds; jumping needs
+    // about log2 of it, and the default maxIter of 25 must suffice
+    assert(rounds > 1 && rounds <= 25, s"rounds = $rounds")
   }
 
-  test("connectedComponents matches a reference union-find on random graphs") {
-    val rnd = new scala.util.Random(42)
-    for (_ <- 1 to 3) {
-      val n = 30
-      val pairList = (1 to 40)
-        .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-        .distinct
-      val got = Dedup.connectedComponents(pairList.toDF("doc_a", "doc_b"))
-        .as[(Long, Long)].collect().toMap
-      // reference: driver-side union-find with min-id roots
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      pairList.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val want = pairList.flatMap { case (a, b) => Seq(a, b) }.distinct
-        .map(x => x -> find(x)).toMap
-      assert(got == want)
+  test("connectedComponents: below the loop width the seed is exact and one round verifies it") {
+    // a path through a shuffled id order: at two or more partitions no
+    // partition holds a long run of it, so only the one-partition
+    // union-find resolves it before the loop starts
+    val order = new scala.util.Random(7).shuffle((0L until 2000L).toVector)
+    val (labels, rounds) = ccAt(order.zip(order.tail), Dedup.ccEdgesPerPartition)
+    assert(labels.size == 2000 && labels.values.forall(_ == 0L))
+    assert(rounds == 1, s"rounds = $rounds")
+  }
+
+  test("connectedComponents: 2-regular rings resolve to their min id across partitions") {
+    // three rings of 500, 300 and 3 nodes: every node has degree 2
+    val rings = Seq((0L, 500L), (1000L, 300L), (5000L, 3L))
+    val pairs = rings.flatMap { case (base, n) =>
+      (0L until n).map(i => (base + i, base + (i + 1) % n))
     }
+    val (labels, rounds) = ccAt(pairs, 1L)
+    assert(labels == rings.flatMap { case (base, n) =>
+      (0L until n).map(i => (base + i) -> base) }.toMap)
+    assert(rounds > 1, s"rounds = $rounds")
   }
 
   test("incrementalCandidatePairs equals the cross-side slice of full candidate generation") {
@@ -2267,6 +2309,30 @@ class SimilaritySpec extends SparkSpec {
     val q2 = Similarity.ivfQuery(i2, Seq(5L, 6L), k = 3, nProbe = 2)
     assert(q1.exceptAll(q2).isEmpty && q2.exceptAll(q1).isEmpty)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p1, "tombstones")))
+  }
+
+  test("ivfCompactDeletes removes a tombstoned row whose embedding is empty") {
+    val emb = load("embeddings")
+    val idx = Similarity.ivfBuildDeterministic(emb, planes = 4, dim = 64)
+    val ghostId = emb.agg(max(col("vec_id"))).head().getLong(0) + 1
+    // a live cell gains one row with an empty embedding; it is the
+    // cell's only dead row, so nothing else puts the cell on the
+    // rewrite list
+    val ghost = idx.assigned.limit(1)
+      .withColumn("vec_id", lit(ghostId))
+      .withColumn("embedding", filter(col("embedding"), _ => lit(false)))
+    val p = java.nio.file.Files.createTempDirectory("graft-ivf-ghost").toString
+    Similarity.ivfWrite(idx.copy(assigned = idx.assigned.unionByName(ghost)), p)
+    val before = Similarity.readPartials(spark, p, "embedding").collect().toSet
+    Similarity.ivfDeleteWrite(p, Seq(ghostId).toDF("vec_id"))
+    Similarity.ivfCompactDeletes(spark, p)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p, "tombstones")))
+    val after = Similarity.ivfRead(spark, p)
+    assert(after.assigned.filter(col("vec_id") === ghostId).isEmpty,
+      "the tombstoned row must not come back once the tombstones are cleared")
+    assert(after.assigned.count() == emb.count())
+    // an empty vector has no partials to subtract
+    assert(Similarity.readPartials(spark, p, "embedding").collect().toSet == before)
   }
 
   test("ivfCompactDeletes on a TRAINED index keeps the KMeans centroids frozen " +
